@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from stackai_vector_db_spark import artifacts
+
 TABLES = (
     "region",
     "nation",
@@ -31,38 +33,23 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Session-scoped table-metadata cache (r11 optimization round, guide §6):
-# every ``spark.read.parquet(path)`` call re-lists the directory and
-# re-reads a footer for schema inference — pure driver-side metadata work,
-# measured 120-150 ms per call on a quiet host and paid 1-3× per query
-# call. A real deployment registers tables in a catalog once and
-# ``spark.table`` resolves from cached metadata; this memo is that
-# behavior for the path-based fixtures. Keyed by (applicationId, realpath,
-# source mtime) so a rewritten fixture (or a different session) never
-# serves a stale file list; the DataFrame itself is lazy — every query
-# still plans, optimizes and executes from the parquet bytes per call.
-# Limitation (documented, not hit by any repo path): for a DIRECTORY-style
-# table the key sees entry add/remove/rename (every Spark write does one),
-# but not an in-place byte rewrite of an existing part file with no
-# rename — such a writer must touch the directory or use a new session.
-_TABLE_CACHE: dict = {}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy handle on a fixture table, one per (session, table version).
+
+    Every ``spark.read.parquet(path)`` re-lists the directory and re-reads
+    a footer for schema inference — driver-side metadata work measured at
+    120-150 ms per call and paid 1-3× per query call. A real deployment
+    registers tables in a catalog once; the artifact store entry is that
+    behavior for the path-based fixtures. The DataFrame is lazy: every
+    query still plans, optimizes and executes from the parquet bytes."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.path.getmtime(os.path.realpath(path))
-    except OSError:
-        mtime = None  # missing path: fall through so the read raises clearly
-    key = (spark.sparkContext.applicationId, os.path.realpath(path), mtime)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = _read_table(spark, path, name)
-    _TABLE_CACHE[key] = df
-    return df
+    return artifacts.get_or_build(
+        spark, "table", sf_dir, (name,), name,
+        lambda _persist: _read_table(spark, path, name),
+    )
 
 
 def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
@@ -106,6 +93,10 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # streaming state writes share it): partition counts for cached/persisted
 # artifacts derive from DATA VOLUME, not core count — ceil(volume / target),
 # floor 1, so small artifacts get 1 partition and 100 TB gets thousands.
+# Builders still fan their per-row compute out across cores; only the stored
+# RESULT takes this layout: left on build parallelism, every query stage over
+# it schedules one task per near-empty partition (measured ~0.3 s of task
+# overhead on a broadcast-join count over a 2,000-row cache).
 ARTIFACT_PART_BYTES = int(
     os.environ.get("SPARK_GRAFT_ARTIFACT_PART_BYTES", str(64 << 20))
 )

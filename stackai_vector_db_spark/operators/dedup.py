@@ -23,6 +23,8 @@ import sys
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from stackai_vector_db_spark import artifacts
+
 P = 1_000_000_007
 TOKEN_BASE = 31
 COMBINE_BASE = 131
@@ -246,26 +248,6 @@ def _shingle_sets_kernel(k: int, id_col: str):
     return part
 
 
-_PERSIST_SLOTS: dict = {}
-
-
-def _replace_persist(slot: str, df: DataFrame) -> DataFrame:
-    """Persist ``df``, releasing the blocks of the previous occupant of
-    ``slot`` (per session). The incremental/batch dedup entry points cache
-    intermediate tables once per CALL; on a long-running caller — above all
-    the streaming ingest path, which runs once per micro-batch forever — a
-    bare ``.persist()`` would accumulate storage blocks without bound.
-    Sequential calls fully consume the previous call's result first, so
-    replacement is safe; a stale handle simply recomputes."""
-    key = (df.sparkSession.sparkContext.applicationId, slot)
-    old = _PERSIST_SLOTS.get(key)
-    if old is not None:
-        old.unpersist(blocking=False)
-    df = df.persist()
-    _PERSIST_SLOTS[key] = df
-    return df
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -311,7 +293,8 @@ def minhash_lsh_pairs(
     if shingle_base is not None:
         base = shingle_base
     else:
-        base = _replace_persist(
+        base = artifacts.replace(
+            docs.sparkSession,
             "lsh_pairs_base",
             with_shingle_sets(docs, text_col, id_col, k, strategy=shingle_strategy),
         )
@@ -436,8 +419,8 @@ def incremental_minhash_pairs(
     # (measured 3× the cost at 250k docs). One fill job, then all branches
     # read the cache. Slotted: the streaming ingest path calls this once
     # per micro-batch forever, so each batch's cache replaces the last.
-    new_base = _replace_persist("inc_new_base", new_base)
-    new_banded = _replace_persist("inc_new_banded", new_banded)
+    new_base = artifacts.replace(new_base.sparkSession, "inc_new_base", new_base)
+    new_banded = artifacts.replace(new_base.sparkSession, "inc_new_banded", new_banded)
     new_base.count()
     new_banded.count()
 
@@ -487,7 +470,8 @@ def ngram_jaccard_pairs(
     toks = tokens_col(F.col(text_col))
     th = token_hashes(toks)
     par = docs.sparkSession.sparkContext.defaultParallelism
-    base = _replace_persist(
+    base = artifacts.replace(
+        docs.sparkSession,
         "ngram_base",
         docs.repartition(par)
         .select(F.col(block_col).alias("__blk"), F.col(id_col), th.alias("__th"))

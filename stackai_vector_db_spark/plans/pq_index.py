@@ -31,6 +31,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from stackai_vector_db_spark import artifacts
+
 # repo root = parent of the package dir; overridable for tests
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -45,28 +47,28 @@ def glob_for(variant: str, kind: str) -> str:
     return os.path.join(ARTIFACT_ROOT, "*", f"{variant}_{kind}", "*.parquet")
 
 
-_CORPUS_KEYS: dict = {}
-
-
 def corpus_key(spark: SparkSession, sf_dir: str) -> int:
     """Fingerprint a fixture dir by (embeddings rows, orders rows) — both
     are parquet-metadata counts (no scan).  SQL twin:
     ``(SELECT count(*) FROM embeddings) * 1000000000 +
     (SELECT count(*) FROM orders)``.
 
-    Memoized per (session, dir): three artifact families (raw PQ,
-    residual PQ, k-means centroids) ask for the same key; without the memo
-    each ran its own pair of count jobs.  Counts alone CAN collide with an
-    unrelated user table — loaders guard with
+    An artifact-store entry over both tables: three artifact families
+    (raw PQ, residual PQ, k-means centroids) ask for the same key, and
+    without it each ran its own pair of count jobs.  Counts alone CAN
+    collide with an unrelated user table — loaders guard with
     :func:`codes_cover_corpus` before trusting a hit."""
-    ck = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    if ck not in _CORPUS_KEYS:
+
+    def _count(_persist) -> int:
         n_emb = spark.read.parquet(
             os.path.join(sf_dir, "embeddings.parquet")
         ).count()
         n_ord = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).count()
-        _CORPUS_KEYS[ck] = n_emb * 1_000_000_000 + n_ord
-    return _CORPUS_KEYS[ck]
+        return n_emb * 1_000_000_000 + n_ord
+
+    return artifacts.get_or_build(
+        spark, "corpus_key", sf_dir, ("embeddings", "orders"), (), _count
+    )
 
 
 def codes_cover_corpus(

@@ -43,15 +43,21 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTC wall clock independent of session timezone)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # The file stream source requires a *directory*; expose the single
-    # fixture file through a temp dir of symlinks (on a real deployment the
-    # source is an arrival directory already).
+    # fixture file through a symlink dir (on a real deployment the source
+    # is an arrival directory already). One dir per fixture, named by its
+    # real path, so repeated calls reuse it instead of leaking one each.
+    import contextlib
+    import hashlib
     import tempfile
 
     from pyspark.sql.types import LongType
 
-    src = os.path.join(sf_dir, "events.parquet")
-    d = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(src, os.path.join(d, "events.parquet"))
+    src = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
+    tag = hashlib.sha1(src.encode()).hexdigest()[:16]
+    d = os.path.join(tempfile.gettempdir(), f"events_stream_{tag}")
+    os.makedirs(d, exist_ok=True)
+    with contextlib.suppress(FileExistsError):  # d's name derives from src
+        os.symlink(src, os.path.join(d, "events.parquet"))
     # Probe the batch reader for the fixture's actual ts type.
     is_nanos = isinstance(
         spark.read.parquet(src).schema["ts"].dataType, LongType

@@ -22,7 +22,7 @@ from __future__ import annotations
 import pytest
 
 from tests.conftest import SF_DIR
-from stackai_vector_db_spark import queries as Q
+from stackai_vector_db_spark import artifacts, queries as Q
 
 STRICT = [
     "q_pq_adc_topk",
@@ -37,9 +37,7 @@ def _fresh_rows(spark, name: str, n_shuffle: int):
     spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
     # Force artifact rebuild so train/encode determinism is exercised too,
     # not just the cached result.
-    Q._PQ_ARTIFACTS.clear()
-    Q._IVF_ARTIFACTS.clear()
-    Q._LSH_ARTIFACTS.clear()
+    artifacts.clear()
     df = Q.REGISTRY[name].fn(spark, SF_DIR)
     rows = sorted(tuple(r) for r in df.collect())
     return df.columns, rows

@@ -247,7 +247,7 @@ def test_kmeans_artifact_carries_train_metadata(spark, tmp_path, monkeypatch):
     column reads this instead of a static "≤50 maxIter" placeholder; (b)
     a FRESH build (empty artifact root) writes the same metadata, so the
     contract survives artifact regeneration."""
-    from stackai_vector_db_spark import queries as Q
+    from stackai_vector_db_spark import artifacts, queries as Q
     from stackai_vector_db_spark.plans import pq_index
 
     sf_dir = "/root/testdata/sf0.001"
@@ -257,17 +257,16 @@ def test_kmeans_artifact_carries_train_metadata(spark, tmp_path, monkeypatch):
     assert isinstance(meta.get("train_iters"), int) and 1 <= meta["train_iters"] <= 50
 
     monkeypatch.setattr(pq_index, "ARTIFACT_ROOT", str(tmp_path))
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "kmeans_cents")
-    monkeypatch.delitem(Q._IVF_ARTIFACTS, memo_key, raising=False)
+    artifacts.clear("kmeans_cents")
     try:
         cents = Q._kmeans_artifact_centroids(spark, sf_dir)
         assert cents.count() == 10
         fresh = pq_index.load_artifact_meta(key, "kmeans", "centroids")
         assert fresh is not None and isinstance(fresh.get("train_iters"), int)
     finally:
-        # drop the tmp-root build from the session memo so later tests
+        # drop the tmp-root build from the session store so later tests
         # re-serve the committed artifact, not this one
-        Q._IVF_ARTIFACTS.pop(memo_key, None)
+        artifacts.clear("kmeans_cents")
 
 
 def test_knn_join_query_chunk_boundary(spark):

@@ -364,7 +364,7 @@ def test_pq_artifacts_rebuild_on_key_collision(spark, monkeypatch, tmp_path):
     (every rewrite renames the part files and dirties the git tree)."""
     from pyspark.sql import functions as F
 
-    from stackai_vector_db_spark import queries as Q
+    from stackai_vector_db_spark import artifacts, queries as Q
     from stackai_vector_db_spark.plans import pq_index
 
     _, good = Q._pq_artifacts(spark, SF_DIR)  # committed artifact, valid
@@ -393,17 +393,17 @@ def test_pq_artifacts_rebuild_on_key_collision(spark, monkeypatch, tmp_path):
 
     monkeypatch.setattr(pq_index, "load_pq_index", fake_load)
     monkeypatch.setattr(pq_index, "write_pq_index", fake_write)
-    Q._PQ_ARTIFACTS.clear()
+    artifacts.clear("pq")
     emb = load_table(spark, SF_DIR, "embeddings")
     _, codes = Q._pq_artifacts(spark, SF_DIR)
-    Q._PQ_ARTIFACTS.clear()
+    artifacts.clear("pq")
     assert pq_index.codes_cover_corpus(emb, codes)
 
 
 def test_pq_artifacts_survive_readonly_root(spark, monkeypatch):
     """A missing artifact on an unwritable install must degrade to the
     in-memory build, not crash the query path."""
-    from stackai_vector_db_spark import queries as Q
+    from stackai_vector_db_spark import artifacts, queries as Q
     from stackai_vector_db_spark.plans import pq_index
 
     def no_load(s, key, variant="raw"):
@@ -414,9 +414,9 @@ def test_pq_artifacts_survive_readonly_root(spark, monkeypatch):
 
     monkeypatch.setattr(pq_index, "load_pq_index", no_load)
     monkeypatch.setattr(pq_index, "write_pq_index", no_write)
-    Q._PQ_ARTIFACTS.clear()
+    artifacts.clear("pq")
     codebooks, codes = Q._pq_artifacts(spark, SF_DIR)
-    Q._PQ_ARTIFACTS.clear()
+    artifacts.clear("pq")
     assert codebooks.shape[0] == 8 and codes.count() > 0
 
 

@@ -3,6 +3,7 @@ parity with batch results, since the reference has no streaming to diff)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -23,6 +24,16 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_events_stream_reuses_one_source_dir(spark, monkeypatch, tmp_path):
+    """The stream source's symlink dir is one per fixture: repeated calls
+    must not leave a new temp dir behind each time."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    read_events_stream(spark, SF_DIR)
+    read_events_stream(spark, SF_DIR + "/")
+    dirs = [d for d in os.listdir(tmp_path) if d.startswith("events_stream_")]
+    assert len(dirs) == 1
 
 
 def test_tumbling_stream_matches_batch(spark):

@@ -13,28 +13,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 
+from bench import HEADLINE, artifact_builders  # noqa: E402
 from stackai_vector_db_spark.queries import REGISTRY  # noqa: E402
 from stackai_vector_db_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "q_knn_brute_topk",
-    "q_knn_window_rank",
-    "q_embed_knn_e2e",
-    "q_fake_embed",
-    "q_dim_check",
-    "q_ivf_probe_topk",
-    "q_join_smj",
-    "q_agg_rollup",
-    "q_dedup_minhash_lsh",
-    "q_events_session",
-    "q_window_frame",
-    "q_ann_lsh_topk",
-    "q_asof_join",
-    "q_range_join",
-    "q_pq_adc_topk",
-    "q_ivf_pq_topk",
-    "q_corpus_pipeline",
-]
 
 
 def main() -> None:
@@ -46,23 +27,15 @@ def main() -> None:
     spark = get_spark(app_name="dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import bench
-
-    from stackai_vector_db_spark import queries as Q
-
-    Q._pq_artifacts(spark, sf_dir)
-    Q._lsh_bucketed(spark, sf_dir)
-    Q._ivf_pq_coded(spark, sf_dir)
-    Q._shingle_base(spark, sf_dir)
-    Q._lsh_banded(spark, sf_dir)
-    Q._e2e_embdocs(spark, sf_dir)
-    split = bench._split_docs_dir(spark, sf_dir)
+    split: dict[str, str] = {}
+    for _, build in artifact_builders(spark, sf_dir, split):
+        build()
 
     for name in names:
         qd = REGISTRY.get(name)
         if qd is None:
             continue
-        q_sf = split if name == "q_corpus_pipeline" else sf_dir
+        q_sf = split["d"] if name == "q_corpus_pipeline" else sf_dir
         df = qd.fn(spark, q_sf)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

@@ -24,35 +24,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 
+from bench import HEADLINE, artifact_builders  # noqa: E402
 from stackai_vector_db_spark.queries import REGISTRY  # noqa: E402
 from stackai_vector_db_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "q_knn_brute_topk",
-    "q_knn_window_rank",
-    "q_embed_knn_e2e",
-    "q_fake_embed",
-    "q_dim_check",
-    "q_ivf_probe_topk",
-    "q_join_smj",
-    "q_agg_rollup",
-    "q_dedup_minhash_lsh",
-    "q_events_session",
-    "q_window_frame",
-    "q_ann_lsh_topk",
-    "q_asof_join",
-    "q_range_join",
-    "q_pq_adc_topk",
-    "q_ivf_pq_topk",
-    "q_corpus_pipeline",
-]
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_iter = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    import bench  # noqa: E402  — reuse its split-docs helper
-
     spark = get_spark(app_name="profile_bench")
     spark.sparkContext.setLogLevel("ERROR")
     tracker = spark.sparkContext.statusTracker()
@@ -71,16 +50,10 @@ def main() -> None:
                 except Exception:
                     pass
 
-    from stackai_vector_db_spark import queries as Q
-
     t0 = time.perf_counter()
-    Q._pq_artifacts(spark, sf_dir)
-    Q._lsh_bucketed(spark, sf_dir)
-    Q._ivf_pq_coded(spark, sf_dir)
-    Q._shingle_base(spark, sf_dir)
-    Q._lsh_banded(spark, sf_dir)
-    Q._e2e_embdocs(spark, sf_dir)
-    split = bench._split_docs_dir(spark, sf_dir)
+    split: dict[str, str] = {}
+    for _, build in artifact_builders(spark, sf_dir, split):
+        build()
     print(f"artifact build {time.perf_counter() - t0:.1f}s", file=sys.stderr)
 
     out: dict[str, dict] = {}
@@ -88,7 +61,7 @@ def main() -> None:
         qd = REGISTRY.get(name)
         if qd is None:
             continue
-        q_sf = split if name == "q_corpus_pipeline" else sf_dir
+        q_sf = split["d"] if name == "q_corpus_pipeline" else sf_dir
         builds, execs, jobsl = [], [], []
         for _ in range(n_iter):
             j0 = len(tracker.getJobIdsForGroup(None) or [])
