@@ -13,7 +13,8 @@ Maps the reference's in-memory machinery to immutable-table conventions
 - tombstone deletes (``base.py:196-206``) → anti-join compaction into the
   next version (no positional coupling: ids are columns).
 - dirty counters + rebuild threshold (``index_service.py:88-97``,
-  ``163-196``) → a tiny control parquet with (library_id, dirty_count).
+  ``163-196``) → a ``{library_id: n}`` map inside the pointer file, bumped
+  or reset by the same atomic swap as the version it describes.
 - lazy embedding backfill (``index_service.py:436-500``) → fake-embed rows
   with empty embeddings at build time.
 - IVF inverted lists (``ivf.py:54-130``) → KMeans centroids +
@@ -21,7 +22,9 @@ Maps the reference's in-memory machinery to immutable-table conventions
 
 The store is the serving-side composition of the operators in
 ``operators/``; every step is a plain DataFrame job that would run
-unchanged on a multi-node cluster.
+unchanged on a multi-node cluster. Every table is read through a declared
+schema (the ``*_SCHEMA`` constants), so opening a segment, tombstone or
+control table plans without a schema-inference job.
 """
 
 from __future__ import annotations
@@ -29,13 +32,16 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections import Counter
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from stackai_vector_db_spark.functions.vector import fake_embedding
 from stackai_vector_db_spark.operators.ivf import (
     assign_clusters,
     kmeans_centroids,
+    local_centroids_df,
     probe_clusters,
 )
 from stackai_vector_db_spark.operators.knn import brute_force_topk, local_queries_df
@@ -44,7 +50,9 @@ from stackai_vector_db_spark.plans.metadata import (
     CHUNK_METADATA_BOUNDS,
     CHUNK_METADATA_DDL,
     CHUNK_METADATA_FIELDS,
+    DOCUMENT_METADATA_DDL,
     DOCUMENT_METADATA_FIELDS,
+    LIBRARY_METADATA_DDL,
     LIBRARY_METADATA_FIELDS,
     DOCUMENT_METADATA_BOUNDS,
     LIBRARY_METADATA_BOUNDS,
@@ -68,6 +76,23 @@ _CHUNK_TYPES = [
 ]
 CHUNK_SCHEMA = ", ".join(f"{n} {t}" for n, t in _CHUNK_TYPES)
 _CHUNK_COLS = [c for c, _ in _CHUNK_TYPES]
+INDEX_SCHEMA = CHUNK_SCHEMA + ", cluster_id int"
+CENTROID_SCHEMA = "cluster_id int, centroid array<double>"
+TOMBSTONE_SCHEMA = "chunk_id long"
+LIBRARY_SCHEMA = (
+    "library_id long, name string, description string, "
+    f"metadata {LIBRARY_METADATA_DDL}"
+)
+DOCUMENT_SCHEMA = (
+    f"document_id long, library_id long, title string, metadata {DOCUMENT_METADATA_DDL}"
+)
+
+
+def _typed_chunks(df: DataFrame) -> DataFrame:
+    """Chunk rows cast to ``CHUNK_SCHEMA`` on write: the declared-schema
+    reads cannot narrow a double column (e.g. ``from_json_lines`` input)."""
+    return df.select(*(F.col(c).cast(t).alias(c) for c, t in _CHUNK_TYPES))
+
 
 DEFAULT_DIM = 16
 REBUILD_THRESHOLD = 0.1  # reference config.py:58
@@ -96,16 +121,21 @@ def _validate_query_text(text: str) -> str:
 
 class VectorStore:
     """Chunks and index carry independent versions behind one pointer file:
-    ``{"chunks": N, "index": M}`` — ingest/delete bump ``chunks``, builds
-    bump ``index``. Any reader holding (N, M) sees a stable snapshot."""
+    ``{"chunks": N, "index": M, "dirty": {"<library_id>": n}}`` —
+    ingest/delete bump ``chunks``, builds bump ``index``. Any reader holding
+    (N, M) sees a stable snapshot, and the dirty counts that go with it."""
 
     def __init__(self, spark: SparkSession, root: str, dim: int = DEFAULT_DIM):
         self.spark = spark
         self.root = root
         self.dim = dim
-        # collected centroid tables per immutable index-version path
-        self._cent_rows_cache: dict = {}
+        # (index path, collected centroid rows) of the current index version
+        self._cent_rows: tuple = (None, None)
         os.makedirs(os.path.join(root, "_meta"), exist_ok=True)
+
+    def _local(self, rows: list[tuple], schema: str) -> DataFrame:
+        """Local Python rows as a LocalRelation (a list plans as a ``LogicalRDD``)."""
+        return self.spark.createDataFrame(pd.DataFrame.from_records(rows), schema)
 
     # ---- version pointer (snapshot swap) ---------------------------------
 
@@ -119,10 +149,18 @@ class VectorStore:
         except FileNotFoundError:
             return {"chunks": 0, "index": 0}
 
-    def _swap_pointer(self, **updates: int) -> None:
+    def _swap_pointer(
+        self, bump: dict | None = None, reset: int | None = None, **updates
+    ) -> None:
         """Atomic pointer swap (write-temp + os.replace) — the
-        IndexSnapshot version bump of index_service.py:270-283."""
+        IndexSnapshot version bump of index_service.py:270-283. ``bump`` /
+        ``reset`` change per-library dirty counts in the same swap."""
         payload = {**self.versions(), **updates}
+        dirty = Counter(payload.get("dirty", {}))
+        dirty.update({str(lib): n for lib, n in (bump or {}).items()})
+        if reset is not None:
+            dirty.pop(str(reset), None)
+        payload["dirty"] = dict(dirty)
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_meta"))
         with os.fdopen(fd, "w") as f:
             json.dump(payload, f)
@@ -217,20 +255,26 @@ class VectorStore:
         # partition-pruned layout.
         v = self.versions()["chunks"]
         seg = os.path.join(self.root, "chunks", f"seg_{v + 1}")
-        validated.select(*_CHUNK_COLS).write.mode("overwrite").parquet(seg)
+        _typed_chunks(validated).write.mode("overwrite").parquet(seg)
         prev = self._chunks_sources(v) or {"data": [], "deletes": []}
         self._write_manifest(
             v + 1,
             prev["data"] + [[seg, v + 1]],
             prev["deletes"],
         )
-        self._swap_pointer(chunks=v + 1)
-        self._bump_dirty(validated)
+        # dirty increment from the written segment (not a re-run of its plan)
+        per_lib = self._read(seg, CHUNK_SCHEMA).groupBy("library_id").count()
+        self._swap_pointer(chunks=v + 1, bump=dict(per_lib.collect()))
         return v + 1
 
     def _write_manifest(self, version: int, data: list, deletes: list) -> None:
         with open(self._chunks_manifest_path(version), "w") as f:
             json.dump({"data": data, "deletes": deletes}, f)
+
+    def _read(self, path: str, schema) -> DataFrame:
+        """Declared-schema read: no schema-inference job, and a column a
+        file predates reads back as typed nulls (additive evolution)."""
+        return self.spark.read.schema(schema).parquet(path)
 
     def _tombstone(self, chunk_ids: DataFrame, new_version: int) -> None:
         """Merge-on-read delete: write the matched ids as one small delete
@@ -245,31 +289,16 @@ class VectorStore:
             new_version, prev["data"], prev["deletes"] + [[path, new_version]]
         )
 
-    def _normalize(self, df: DataFrame) -> DataFrame:
-        """Common column order/types across partitioned dirs (library_id
-        inferred from directory names) and unpartitioned segments.
-
-        Schema evolution guard: segments written before a column existed
-        (e.g. pre-metadata, pre-threshold stores) read back with typed
-        nulls instead of failing analysis — the additive-column rule of
-        every table format."""
-        cols = set(df.columns)
-        return df.select(
-            *(
-                (F.col(c) if c in cols else F.lit(None)).cast(t).alias(c)
-                for c, t in _CHUNK_TYPES
-            )
-        )
-
     def read_chunks(self, version: int | None = None) -> DataFrame | None:
         v = self.versions()["chunks"] if version is None else version
         sources = self._chunks_sources(v)
         if sources is None:
             return None
+        # select: a partitioned dir puts library_id last
         parts = [
-            self._normalize(self.spark.read.parquet(p)).withColumn(
-                "__seq", F.lit(seq)
-            )
+            self._read(p, CHUNK_SCHEMA)
+            .select(*_CHUNK_COLS)
+            .withColumn("__seq", F.lit(seq))
             for p, seq in sources["data"]
         ]
         if not parts:
@@ -280,7 +309,7 @@ class VectorStore:
         if sources["deletes"]:
             dels = None
             for p, seq in sources["deletes"]:
-                d = self.spark.read.parquet(p).select(
+                d = self._read(p, TOMBSTONE_SCHEMA).select(
                     F.col("chunk_id").alias("__del_id"),
                     F.lit(seq).alias("__del_seq"),
                 )
@@ -381,10 +410,7 @@ class VectorStore:
             raise ValueError(
                 f"embedding dim {len(embedding)} != store dim {self.dim}"
             )
-        cur = self.read_chunks()
-        old = cur.filter(F.col("chunk_id") == chunk_id) if cur is not None else None
-        if old is None or old.isEmpty():
-            raise ValueError(f"chunk {chunk_id} not found")
+        old, bump = self._match_chunk(chunk_id)
         # Merge-on-read update = tombstone(old) + one-row segment(new):
         # O(1 row) written, never a corpus rewrite. The new segment's seq
         # equals the tombstone's, so only the OLD row is masked.
@@ -412,14 +438,12 @@ class VectorStore:
                     CHUNK_METADATA_FIELDS, metadata, CHUNK_METADATA_BOUNDS
                 ),
             )
-        v = self.versions()["chunks"] + 1
-        self._tombstone(old.select("chunk_id"), v)
+        v = self._tombstone_id(chunk_id)
         seg = os.path.join(self.root, "chunks", f"seg_{v}")
-        updated.select(*_CHUNK_COLS).coalesce(1).write.mode("overwrite").parquet(seg)
+        _typed_chunks(updated).coalesce(1).write.mode("overwrite").parquet(seg)
         m = self._chunks_sources(v)
         self._write_manifest(v, m["data"] + [[seg, v]], m["deletes"])
-        self._swap_pointer(chunks=v)
-        self._bump_dirty(old)
+        self._swap_pointer(chunks=v, bump=bump)
         return v
 
     def delete_chunk(self, chunk_id: int) -> int:
@@ -428,14 +452,28 @@ class VectorStore:
         existence check first, then delete, then mark the library index
         dirty). Merge-on-read: one tombstone row written, no segment
         rewrite; readers pinned to the old version are untouched."""
+        _, bump = self._match_chunk(chunk_id)
+        v = self._tombstone_id(chunk_id)
+        self._swap_pointer(chunks=v, bump=bump)
+        return v
+
+    def _match_chunk(self, chunk_id: int) -> tuple[DataFrame, Counter]:
+        """The current rows of ``chunk_id`` and their per-library count:
+        one collect is both the existence check and the dirty increment."""
         cur = self.read_chunks()
-        old = cur.filter(F.col("chunk_id") == chunk_id) if cur is not None else None
-        if old is None or old.isEmpty():
+        if cur is None:
             raise ValueError(f"chunk {chunk_id} not found")
+        old = cur.filter(F.col("chunk_id") == chunk_id)
+        bump = Counter(r.library_id for r in old.select("library_id").collect())
+        if not bump:
+            raise ValueError(f"chunk {chunk_id} not found")
+        return old, bump
+
+    def _tombstone_id(self, chunk_id: int) -> int:
+        """Tombstone one literal id into the next chunks version (no store
+        scan); returns that version."""
         v = self.versions()["chunks"] + 1
-        self._tombstone(old.select("chunk_id"), v)
-        self._swap_pointer(chunks=v)
-        self._bump_dirty(old)
+        self._tombstone(self._local([(chunk_id,)], TOMBSTONE_SCHEMA), v)
         return v
 
     # ---- cascade delete (J4, trace library_service.py:67-77) -------------
@@ -455,37 +493,10 @@ class VectorStore:
         self._swap_pointer(chunks=v)
         return v
 
-    # ---- dirty control table (A7) ----------------------------------------
-
-    def _dirty_path(self) -> str:
-        return os.path.join(self.root, "control", "dirty")
-
-    def _write_dirty(self, df: DataFrame) -> None:
-        # tiny control table (O(libraries) rows) → the guarded staged
-        # single-file rewrite; MAX_CONTROL_ROWS turns the size assumption
-        # into an enforced contract.
-        self._rewrite_control(df, self._dirty_path())
-
-    def _bump_dirty(self, new_rows: DataFrame) -> None:
-        inc = new_rows.groupBy("library_id").agg(F.count(F.lit(1)).alias("dirty_count"))
-        if os.path.exists(self._dirty_path()):
-            prev = self.spark.read.parquet(self._dirty_path())
-            inc = (
-                prev.unionByName(inc)
-                .groupBy("library_id")
-                .agg(F.sum("dirty_count").alias("dirty_count"))
-            )
-        self._write_dirty(inc)
+    # ---- dirty counters (A7) ---------------------------------------------
 
     def dirty_count(self, library_id: int) -> int:
-        if not os.path.exists(self._dirty_path()):
-            return 0
-        row = (
-            self.spark.read.parquet(self._dirty_path())
-            .filter(F.col("library_id") == library_id)
-            .collect()
-        )
-        return row[0]["dirty_count"] if row else 0
+        return self.versions().get("dirty", {}).get(str(library_id), 0)
 
     def needs_rebuild(self, library_id: int) -> bool:
         """dirty_count / total >= 0.1 (index_service.py:88-97)."""
@@ -496,15 +507,6 @@ class VectorStore:
             else 0
         )
         return self.dirty_count(library_id) / max(total, 1) >= REBUILD_THRESHOLD
-
-    def _reset_dirty(self, library_id: int) -> None:
-        if not os.path.exists(self._dirty_path()):
-            return
-        self._write_dirty(
-            self.spark.read.parquet(self._dirty_path()).filter(
-                F.col("library_id") != library_id
-            )
-        )
 
     # ---- index build (trace §3.2) ----------------------------------------
 
@@ -534,10 +536,7 @@ class VectorStore:
         cur = self.read_chunks()
         if cur is None:
             raise ValueError("empty store")
-        lib = cur.filter(F.col("library_id") == library_id)
-        if lib.isEmpty():
-            raise ValueError(f"library {library_id} is empty")  # EmptyLibraryError
-        lib = lib.withColumn(
+        lib = cur.filter(F.col("library_id") == library_id).withColumn(
             "embedding",
             F.when(F.size("embedding") > 0, F.col("embedding")).otherwise(
                 fake_embedding(F.col("text"), self.dim).cast("array<float>")
@@ -545,6 +544,8 @@ class VectorStore:
         )
         vectors = lib.select(F.col("chunk_id").alias("vec_id"), "embedding")
         n = vectors.count()
+        if n == 0:
+            raise ValueError(f"library {library_id} is empty")  # EmptyLibraryError
         if algorithm is None:
             algorithm = self.select_algorithm(n, self.dim)
         if algorithm not in ("linear", "ivf"):
@@ -558,9 +559,7 @@ class VectorStore:
         if algorithm == "linear":
             # Degenerate one-cluster layout: centroid = origin, all vectors
             # in cluster 0 (probe filter passes everything → exact scan).
-            cents = self.spark.createDataFrame(
-                [(0, [0.0] * self.dim)], "cluster_id int, centroid array<double>"
-            )
+            cents = local_centroids_df(self.spark, [(0, [0.0] * self.dim)])
             assigned = vectors.select("vec_id", F.lit(0).alias("cluster_id"))
         else:
             # k must not exceed the vector count (MLlib contract; the
@@ -586,9 +585,9 @@ class VectorStore:
         # tombstone-skip applies only deletes NEWER than this (older ones
         # were already excluded by the merge-on-read build scan).
         self._swap_pointer(
-            index=new_v, algorithm=algorithm, index_chunks=self.versions()["chunks"]
+            index=new_v, algorithm=algorithm, index_chunks=self.versions()["chunks"],
+            reset=library_id,
         )
-        self._reset_dirty(library_id)
         return new_v
 
     def read_index(self, version: int | None = None) -> tuple[DataFrame, DataFrame]:
@@ -598,21 +597,23 @@ class VectorStore:
             # reference base.py IndexNotBuiltError: querying before build is
             # a clean domain error, not a storage-layer stack trace.
             raise ValueError(f"index not built (version {v})")
-        chunks = self.spark.read.parquet(path)
-        cents = self.spark.read.parquet(os.path.join(path, "_centroids"))
+        chunks = self._read(path, INDEX_SCHEMA)
+        cents = self._read(os.path.join(path, "_centroids"), CENTROID_SCHEMA)
         return chunks, cents
 
     def _centroid_rows(self, version: int | None = None):
-        """The versioned centroid table collected once per index version —
+        """The current index version's centroid table, collected once —
         index OPEN work (the in-memory coarse quantizer), shared by every
         subsequent search instead of re-collected per query. Versions are
-        immutable (pointer-swap writes), so the path is a safe cache key."""
+        immutable (pointer-swap writes), so the path is a safe cache key.
+        Only the current version is kept; a pinned ``version`` re-collects."""
         v = self.versions()["index"] if version is None else version
         path = self._index_path(v)
-        rows = self._cent_rows_cache.get(path)
-        if rows is None:
-            _, cents = self.read_index(v)
-            rows = self._cent_rows_cache[path] = cents.collect()
+        cached_path, rows = self._cent_rows
+        if cached_path != path:
+            rows = self.read_index(v)[1].collect()
+            if version is None:
+                self._cent_rows = (path, rows)
         return rows
 
     # ---- search (trace §3.1) ---------------------------------------------
@@ -684,7 +685,7 @@ class VectorStore:
             return None
         out = None
         for p in paths:
-            d = self.spark.read.parquet(p).select("chunk_id")
+            d = self._read(p, TOMBSTONE_SCHEMA)
             out = d if out is None else out.unionByName(d)
         return out
 
@@ -804,7 +805,7 @@ class VectorStore:
     def list_libraries(self) -> DataFrame | None:
         if not os.path.exists(self._libraries_path()):
             return None
-        return self.spark.read.parquet(self._libraries_path()).orderBy(
+        return self._read(self._libraries_path(), LIBRARY_SCHEMA).orderBy(
             F.lower("name")
         )
 
@@ -875,7 +876,7 @@ class VectorStore:
         if len(name) > 255:
             raise ValueError("library name too long")  # config.py:53-54
         cur = self.list_libraries()
-        row = self.spark.createDataFrame(
+        row = self._local(
             [(library_id, name.strip(), description)],
             "library_id long, name string, description string",
         ).withColumn("metadata", metadata_lit(LIBRARY_METADATA_FIELDS, metadata, LIBRARY_METADATA_BOUNDS))
@@ -945,7 +946,7 @@ class VectorStore:
 
         tmp = path + "_tmp"
         df.write.mode("overwrite").parquet(tmp)
-        staged = self.spark.read.parquet(tmp)
+        staged = self._read(tmp, df.schema)
         n = staged.count()
         if n > self.MAX_CONTROL_ROWS:
             shutil.rmtree(tmp, ignore_errors=True)
@@ -969,7 +970,7 @@ class VectorStore:
         ``document_repository.py:24-27``)."""
         if not os.path.exists(self._documents_path()):
             return None
-        df = self.spark.read.parquet(self._documents_path())
+        df = self._read(self._documents_path(), DOCUMENT_SCHEMA)
         if library_id is not None:
             df = df.filter(F.col("library_id") == library_id)
         return df.orderBy(F.lower("title"))
@@ -992,7 +993,7 @@ class VectorStore:
         libs = self.list_libraries()
         if libs is None or libs.filter(F.col("library_id") == library_id).isEmpty():
             raise ValueError(f"library {library_id} not found")
-        row = self.spark.createDataFrame(
+        row = self._local(
             [(document_id, library_id, title.strip())],
             "document_id long, library_id long, title string",
         ).withColumn("metadata", metadata_lit(DOCUMENT_METADATA_FIELDS, metadata, DOCUMENT_METADATA_BOUNDS))
@@ -1030,9 +1031,7 @@ class VectorStore:
             raise ValueError(f"document {document_id} not found")
         self._rewrite_documents(cur.filter(F.col("document_id") != document_id))
         if self.read_chunks() is not None:
-            self.delete_documents(
-                self.spark.createDataFrame([(document_id,)], "document_id long")
-            )
+            self.delete_documents(self._local([(document_id,)], "document_id long"))
 
     def delete_library(self, library_id: int) -> None:
         """Cascade: drop the library row and anti-join its chunks away
@@ -1043,11 +1042,10 @@ class VectorStore:
         remaining = cur.filter(F.col("library_id") != library_id)
         self._rewrite_control(remaining, self._libraries_path())
         chunks = self.read_chunks()
+        v = self.versions()["chunks"]
         if chunks is not None:
-            matched = chunks.filter(F.col("library_id") == library_id).select(
-                "chunk_id"
+            v += 1
+            self._tombstone(
+                chunks.filter(F.col("library_id") == library_id).select("chunk_id"), v
             )
-            v = self.versions()["chunks"] + 1
-            self._tombstone(matched, v)
-            self._swap_pointer(chunks=v)
-        self._reset_dirty(library_id)
+        self._swap_pointer(chunks=v, reset=library_id)

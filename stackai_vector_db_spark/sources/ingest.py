@@ -49,7 +49,7 @@ def validate_chunks(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Sources that predate the similarity_threshold column (csv fixtures,
     older JSON shapes) validate as all-null — additive schema evolution,
-    same rule as plans/store._normalize."""
+    same rule as plans/store's declared read schemas."""
     if "similarity_threshold" not in rows.columns:
         rows = rows.withColumn(
             "similarity_threshold", F.lit(None).cast("double")

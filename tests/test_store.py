@@ -774,15 +774,18 @@ def test_control_rewrite_size_guard(spark, store):
     O(entities) control tables — the guard makes the contract fail loudly
     instead of silently serializing a data-scale table through one writer
     (round-3/4 judge ask). Applies to every control path, including the
-    dirty table."""
+    libraries table."""
     store.MAX_CONTROL_ROWS = 10  # shrink the contract for the test
     big = spark.range(11).select(
-        F.col("id").alias("library_id"), F.lit(1).alias("dirty_count")
+        F.col("id").alias("library_id"),
+        F.concat(F.lit("lib-"), F.col("id")).alias("name"),
+        F.lit("").alias("description"),
     )
     import os
 
+    libs = store._libraries_path()
     with pytest.raises(RuntimeError, match="out of contract"):
-        store._write_dirty(big)
+        store._rewrite_control(big, libs)
     # a failed guard must not leave its staging dir behind (round-5
     # review: the stage is parallel, so even an out-of-contract table is
     # never funneled through one writer — and its tmp dir is removed).
@@ -790,13 +793,143 @@ def test_control_rewrite_size_guard(spark, store):
     # _rewrite_control stages to (round-5 advisor: the old assert ran
     # after a successful rewrite and on a different path, so it held
     # vacuously).
-    assert not os.path.exists(store._dirty_path() + "_tmp")
+    assert not os.path.exists(libs + "_tmp")
     with pytest.raises(RuntimeError, match="out of contract"):
-        store._rewrite_control(big, store._dirty_path() + "_direct")
-    assert not os.path.exists(store._dirty_path() + "_direct_tmp")
+        store._rewrite_control(big, libs + "_direct")
+    assert not os.path.exists(libs + "_direct_tmp")
     # within contract: still writes fine — and the SUCCESS path must also
     # remove its staging copy (round-5 advisor: leaving it doubles
     # control-table storage on every rewrite)
-    store._write_dirty(big.limit(3))
-    assert spark.read.parquet(store._dirty_path()).count() == 3
-    assert not os.path.exists(store._dirty_path() + "_tmp")
+    store._rewrite_control(big.limit(3), libs)
+    assert spark.read.parquet(libs).count() == 3
+    assert not os.path.exists(libs + "_tmp")
+
+
+def _jobs(spark, group: str, fn) -> int:
+    """The number of Spark jobs ``fn`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_calls_launch_no_bookkeeping_jobs(spark, store):
+    """Store reads declare their schemas and the dirty counters ride in the
+    version pointer, so a call runs only the jobs its work needs: planning
+    a search on an opened index runs the library check alone, and a
+    one-row write or a 20-row ingest at most 3 jobs."""
+    store.create_library(1, "lib")
+    store.ingest_chunks(_chunk_rows(spark, 60))
+    store.build_index(1)
+    vec = [0.1] * 16
+    store.search_vector(1, vec, k=3).collect()  # opens the index version
+    assert _jobs(spark, "plan", lambda: store.search_vector(1, vec, k=3)) <= 1
+    assert _jobs(
+        spark, "update", lambda: store.update_chunk_text(100003, "fresh text")
+    ) <= 3
+    assert _jobs(spark, "delete", lambda: store.delete_chunk(100004)) <= 3
+    batch = _chunk_rows(spark, 20, start_doc=60)
+    assert _jobs(spark, "ingest", lambda: store.ingest_chunks(batch)) <= 3
+
+
+def test_dirty_counters_ride_the_version_pointer(spark, store):
+    """Each write bumps its libraries' dirty counts in the same pointer swap
+    as the chunks version it writes; a build resets only its library, and
+    deleting a library resets that library. No control table is written."""
+    import os
+
+    def pointer():
+        vs = store.versions()
+        return vs["chunks"], vs["dirty"]
+
+    def answers(lib):
+        return store.dirty_count(lib), store.needs_rebuild(lib)
+
+    store.create_library(1, "one")
+    store.create_library(2, "two")
+    store.ingest_chunks(_chunk_rows(spark, 20, library_id=1))
+    assert pointer() == (1, {"1": 20})
+    store.ingest_chunks(_chunk_rows(spark, 5, library_id=2))
+    assert pointer() == (2, {"1": 20, "2": 5})
+    store.update_chunk_text(100003, "fresh replacement text")
+    assert pointer() == (3, {"1": 21, "2": 5})
+    store.delete_chunk(100004)
+    assert pointer() == (4, {"1": 22, "2": 5})
+    assert (answers(1), answers(2)) == ((22, True), (5, True))
+    unbuilt = {"is_built": False, "index_version": 0, "chunks_version": 4,
+               "algorithm": None, "size": 0, "needs_rebuild": True}
+    assert store.index_status(1) == {**unbuilt, "dirty_count": 22}
+    assert store.index_status(2) == {**unbuilt, "dirty_count": 5}
+
+    store.build_index(1)
+    vs = store.versions()
+    assert (vs["index"], vs["dirty"]) == (1, {"2": 5})
+    assert (answers(1), answers(2)) == ((0, False), (5, True))
+    built = {"is_built": True, "index_version": 1, "chunks_version": 4,
+             "algorithm": "linear"}
+    assert store.index_status(1) == {
+        **built, "size": 19, "dirty_count": 0, "needs_rebuild": False
+    }
+    assert store.index_status(2) == {
+        **built, "size": 0, "dirty_count": 5, "needs_rebuild": True
+    }
+
+    store.delete_library(2)
+    assert pointer() == (5, {})
+    assert (answers(1), answers(2)) == ((0, False), (0, False))
+    assert store.index_status(2) == {
+        **built, "chunks_version": 5, "size": 0, "dirty_count": 0,
+        "needs_rebuild": False,
+    }
+    assert not os.path.exists(os.path.join(store.root, "control", "dirty"))
+
+
+def test_centroid_cache_keeps_current_version_only(spark, store):
+    """The collected centroid table is kept for the current index version
+    only: rebuilds replace it, and a pinned older version re-collects
+    without displacing it."""
+    store.ingest_chunks(_chunk_rows(spark, 40))
+    vec = [0.1] * 16
+    for _ in range(3):
+        store.build_index(1, n_clusters=2)
+        store.search_vector(1, vec, k=1).collect()
+    assert store._cent_rows[0] == store._index_path(3)
+    assert store.search_vector(1, vec, k=1, version=1).count() == 1
+    assert store._cent_rows[0] == store._index_path(3)
+
+
+def test_ingest_json_source_double_columns(spark, store):
+    """The JSON ingest source types embedding as array<double> and
+    similarity_threshold as double; the store writes them as CHUNK_SCHEMA's
+    float types, so every later declared-schema read, build and search
+    works on the segment."""
+    import json
+
+    from stackai_vector_db_spark.sources.ingest import (
+        from_json_lines,
+        validate_chunks,
+    )
+
+    payloads = [
+        {"chunk_id": i, "document_id": 1, "library_id": 1,
+         "text": f"json chunk {i}", "start_index": 0,
+         "embedding": [float(i + j) / 16 for j in range(16)],
+         "similarity_threshold": 0.5}
+        for i in range(6)
+    ]
+    lines = spark.createDataFrame([(json.dumps(p),) for p in payloads], "value string")
+    valid, _ = validate_chunks(from_json_lines(spark, lines))
+    assert dict(valid.dtypes)["embedding"] == "array<double>"
+    store.ingest_chunks(valid)
+    rows = sorted(store.read_chunks().collect(), key=lambda r: r.chunk_id)
+    assert [r.chunk_id for r in rows] == list(range(6))
+    assert rows[3].similarity_threshold == 0.5
+    assert rows[3].embedding == pytest.approx(payloads[3]["embedding"])
+    store.build_index(1, algorithm="linear")
+    top = store.search_vector(1, payloads[3]["embedding"], k=1).collect()
+    assert [r.chunk_id for r in top] == [3]
+    store.update_chunk(4, text="json chunk four")
+    assert store.read_chunks().filter("chunk_id = 4").first().text == "json chunk four"
